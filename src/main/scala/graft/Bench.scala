@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times the headline query set on SPARK_GRAFT_SF_DIR
@@ -207,24 +206,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // volume-derived (== cpus at sf0.1; grows with the input so a
-    // bigger SF never hash-aggregates through under-sized shuffles)
-    val parts = GraftSession.shufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      // scale-adaptive AQE coalesce floor (see GraftSession scaladoc):
-      // inert at production partition sizes, keeps small post-shuffle
-      // stages on all cores instead of 1-2 tasks
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        GraftSession.aqeMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // volume-derived shuffle partitions (== cpus at sf0.1; grows with
+    // the input so a bigger SF never hash-aggregates through under-sized
+    // shuffles) and the AQE coalesce floor: see GraftSession
+    val spark = GraftSession.create(cpus, sfDir)
 
     val qs = SparkEntry.headline
 

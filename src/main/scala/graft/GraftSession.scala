@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Volume-aware session sizing — the "no manual knob" closure of the
   * round-9 100× probe finding: `spark.sql.shuffle.partitions` pinned
   * at core count is right for sf0.1 but super-linear at 100× (the
@@ -20,8 +22,8 @@ package graft
   *
   * `SPARK_GRAFT_SHUFFLE_PARTITIONS` remains an explicit override for
   * probes that want to measure a pinned value; when unset, every
-  * entrypoint (Bench/Verify/QBench/HostileVerify) derives the value
-  * from the data it is about to read.
+  * session built by [[create]] derives the value from the data it is
+  * about to read.
   */
 object GraftSession {
 
@@ -84,4 +86,37 @@ object GraftSession {
     * 256k holds both ends (OPTIMIZATION_r18.md has the full table). */
   def aqeMinPartitionSize: String =
     sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "256k")
+
+  /** The one way the engine's mains and the test session build a
+    * session: `local[cpus]`, [[shufflePartitions]] for `sfDir`, AQE on
+    * with the [[aqeMinPartitionSize]] floor, UTC, UI off, log level
+    * WARN; `extra` is applied last, so it can override any of these.
+    * It only sets configs — nothing a query needs for a correct answer
+    * may live here, because the benchmark builds its own session. */
+  def create(cpus: Int, sfDir: String,
+      extra: Map[String, String] = Map.empty): SparkSession = {
+    val base = Map(
+      "spark.sql.shuffle.partitions" -> shufflePartitions(sfDir, cpus).toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+        aqeMinPartitionSize,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .appName("graft").config(base ++ extra).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Configs under which answers must not change: no adaptive
+    * re-planning, no exchange or subquery reuse, and a 1KB broadcast
+    * threshold that turns nearly every join into a shuffle join. The
+    * round-3 GlobalRank bug (two range exchanges that agreed only
+    * because reuse collapsed them) is the class this catches. All four
+    * are runtime SQL confs, so they also apply to `spark.newSession()`. */
+  val Hostile: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.exchange.reuse" -> "false",
+    "spark.sql.execution.reuseSubquery" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "1KB")
 }

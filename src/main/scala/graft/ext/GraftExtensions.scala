@@ -30,8 +30,8 @@ object UdfRewriteRule extends Rule[LogicalPlan] {
   * registers `super_category` as a SQL function backed by the native
   * expression. Usable two ways:
   *
-  *  - build time: `SparkSession.builder().withExtensions(new GraftExtensions)`
-  *    (or `spark.sql.extensions=graft.ext.GraftExtensions`);
+  *  - build time: `withExtensions(new GraftExtensions)` when the
+  *    session is made (or `spark.sql.extensions=graft.ext.GraftExtensions`);
   *  - runtime: `GraftExtensions.install(spark)` for sessions the
   *    driver already created (uses experimental extraOptimizations +
   *    the function registry — same effect, no session rebuild).

@@ -144,8 +144,10 @@ object GraphOps {
     import s.implicits._
     val li = Tables.lineitem(s, d)
       .select($"l_suppkey".as("sk"), $"l_partkey".as("pk")).distinct()
-    val eId = li.select(($"sk" * 2).as("src"), ($"pk" * 2 + 1).as("dst"))
-      .unionAll(li.select(($"pk" * 2 + 1).as("src"), ($"sk" * 2).as("dst")))
+    // widen first: 2·k of an int32 key near Int.MaxValue overflows
+    val (sk, pk) = ($"sk".cast("long"), $"pk".cast("long"))
+    val eId = li.select((sk * 2).as("src"), (pk * 2 + 1).as("dst"))
+      .unionAll(li.select((pk * 2 + 1).as("src"), (sk * 2).as("dst")))
     pagerankOn(eId, Iterations, Some(s"graph.pr_id:$d"))
       .select(
         when($"node" % 2 === 0, concat(lit("s"), expr("node div 2")))

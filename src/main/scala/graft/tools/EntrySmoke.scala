@@ -2,7 +2,11 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Simulates the driver's flagship smoke: bare session, entry(), count. */
+/** Simulates an external caller's flagship smoke: bare session,
+  * entry(), count. The session is bare on purpose, not made by
+  * [[graft.GraftSession.create]]: `entry` is called on a session its
+  * caller configured, so it must work without the engine's configs
+  * (no UTC pin, default shuffle partitions, no AQE floor). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")

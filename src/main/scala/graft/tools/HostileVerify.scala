@@ -1,68 +1,21 @@
 package graft.tools
 
-import graft.{GraftCaches, SparkEntry}
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import graft.{GraftSession, Verify}
 
-/** Correctness dump under HOSTILE configs — exchange reuse OFF, AQE
-  * OFF, tiny autoBroadcast threshold. This is the config class that
-  * exposed the round-3 GlobalRank bug (two range exchanges that only
-  * agreed because reuse collapsed them): any query whose answer
-  * depends on exchange deduplication, adaptive re-planning, or a
-  * particular join strategy will diverge here and fail the same
-  * check_oracle gate. Plans get slower (that's expected); ANSWERS must
-  * not change.
+/** [[graft.Verify]]'s dump under [[GraftSession.Hostile]] configs. Plans
+  * get slower (that's expected); ANSWERS must not change, so the output
+  * must pass the same check_oracle gate. Exits 1 if any query fails.
   *
-  *   sbt "runMain graft.tools.HostileVerify /root/testdata/sf0.01 target/hostile_out"
-  *   python3 tools/check_oracle.py /root/testdata/sf0.01 target/hostile_out
+  *   sbt "runMain graft.tools.HostileVerify <sfDir> target/hostile_out [q_a,q_b]"
+  *   python3 tools/check_oracle.py <sfDir> target/hostile_out
   */
 object HostileVerify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated query names (Verify's
-    // convention) — hostile-check just the queries under iteration.
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        graft.GraftSession.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.exchange.reuse", "false")
-      .config("spark.sql.execution.reuseSubquery", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "1KB")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    var failed = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed += 1
-        System.err.println(s"[hostile] $name failed: ${e.getMessage}")
-      }
-    }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    GraftCaches.release(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = GraftSession.create(cpus, sfDir, GraftSession.Hostile)
+    val failures = Verify.dump(spark, sfDir, outDir, Verify.only(args))
     spark.stop()
-    if (failed > 0) sys.exit(1)
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

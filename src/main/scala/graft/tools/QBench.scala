@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Subset slice of graft.Bench for perf adjudication: times only the
   * NAMED catalog queries under the exact official bench config
   * (local[32], shuffle.partitions=32, AQE on, noop sink, warm-up then
@@ -27,26 +25,8 @@ object QBench {
     require(unknownFlags.isEmpty,
       s"unknown flags: ${unknownFlags.mkString(", ")} (only -cold is supported)")
     val names = tail.filterNot(_.startsWith("-")).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Volume-derived (round 10): shuffle.partitions must grow with
-    // data volume (32 is right for sf0.1; a 100× probe wants hundreds
-    // so per-partition sorts/hash-sets fit in memory). GraftSession
-    // derives it from the input dir's footprint — == cpus at sf0.1,
-    // the pinned official config — and SPARK_GRAFT_SHUFFLE_PARTITIONS
-    // stays available as an explicit pin for controlled probes.
-    val shufflePartitions =
-      graft.GraftSession.shufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-qbench")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.GraftSession.aqeMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.create(cpus, sfDir)
 
     val picked = graft.SparkEntry.catalog.filter(q => names(q.name))
     require(picked.size == names.size,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Builds an order-of-magnitude scale replica of a testdata sfDir for
@@ -28,17 +28,10 @@ object ScaleProbe {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleprobe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // copies events.parquet as stored, whatever its timestamp encoding
+    val spark = graft.GraftSession.create(cpus, src,
+      Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 
     val K = 10000000L  // entity-key stride (cust/supp/part/doc/vec/user)
     val O = 100000000L // event/order-key stride (denser id spaces)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc stage-level decomposition of a catalog query (guide §1.1:
   * find WHERE the time goes before touching anything). Runs the named
@@ -15,19 +14,8 @@ object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stageprobe")
-      .config("spark.sql.shuffle.partitions",
-        graft.GraftSession.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.GraftSession.aqeMinPartitionSize)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.create(cpus, sfDir)
 
     val picked = graft.SparkEntry.catalog.filter(q => names(q.name))
     require(picked.size == names.size,
@@ -67,7 +55,9 @@ object StageProbe {
       val t0 = System.nanoTime()
       q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain (private API)
+      if (!org.apache.spark.ListenerBusBridge.drain(spark.sparkContext, 10000))
+        println(s"[stageprobe] ${q.name}: listener bus not drained " +
+          "after 10 s; stage rows may be missing")
       Option(qeHolder.get()).foreach { qe =>
         val ph = qe.tracker.phases
           .map { case (k, v) => s"$k=${v.endTimeMs - v.startTimeMs}ms" }

@@ -3,7 +3,7 @@ package graft.tools
 import graft.ProcCpu
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.{Change, Event}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.nio.file.{Files, Paths}
 
@@ -76,15 +76,12 @@ object StreamBench {
     // ~minutes-long waves (r16 evidence in the sweeps array), so an
     // artifact attempt on a noisy evening may want more windows.
     val maxSweeps = args.drop(2).headOption.map(_.toInt).getOrElse(MaxSweeps)
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-streambench")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // no input dir: the streams are generated in memory, so the
+    // shuffle partitions stay at the 8 cores
+    val spark = graft.GraftSession.create(8, "",
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")))
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       spark.sqlContext

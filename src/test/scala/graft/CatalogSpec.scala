@@ -4,20 +4,9 @@ import org.apache.spark.sql.{types, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
   val sf = "/root/testdata/sf0.001"
+  lazy val spark: SparkSession = GraftSession.create(4, sf,
+    Map("spark.sql.warehouse.dir" -> "target/spark-warehouse"))
 }
 
 /** Smoke + invariant coverage for every catalog entry at sf0.001. */

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Pins the volume-derived shuffle-partition rule (round 10): the
   * q_yelp_master_volume 100× super-linearity was root-caused to a
@@ -43,5 +44,37 @@ class GraftSessionSpec extends AnyFunSuite {
     assume(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").isEmpty)
     assert(GraftSession.shufflePartitions("/root/testdata/sf0.1", 32)
       === 32)
+  }
+
+  test("create: the test session carries the base config plus its " +
+      "extra warehouse dir") {
+    val conf = SparkTestSession.spark.conf
+    assert(SparkTestSession.spark.sparkContext.master === "local[4]")
+    assert(conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+      === GraftSession.aqeMinPartitionSize)
+    assert(conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.ui.enabled") === "false")
+    assert(conf.get("spark.sql.shuffle.partitions") ===
+      GraftSession.shufflePartitions(SparkTestSession.sf, 4).toString)
+    assert(conf.get("spark.sql.warehouse.dir").endsWith("target/spark-warehouse"))
+  }
+
+  test("sessions are built only by GraftSession.create (and by " +
+      "EntrySmoke's deliberately bare session)") {
+    val pattern = "SparkSession" + ".builder"
+    val allowed = Set("GraftSession.scala", "EntrySmoke.scala")
+    val files = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally w.close()
+    }
+    assert(files.size > 100, s"source tree not found: ${files.size} files")
+    val offenders = files.filter { p =>
+      !allowed(p.getFileName.toString) &&
+        java.nio.file.Files.readString(p).contains(pattern)
+    }
+    assert(offenders.isEmpty,
+      s"build sessions with GraftSession.create: ${offenders.mkString(", ")}")
   }
 }

@@ -16,15 +16,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * The pins assert EQUALITY, not just an upper bound: a shrink is a
   * (welcome) plan improvement that must be re-pinned consciously so
   * the table stays the truth. Regenerate with:
-  *   sbt "runMain graft.tools.PlanCensus"
+  *   sbt "runMain graft.tools.Plans <sf0.001 dir>"
   * and paste — the tool prints this exact syntax under this exact
   * session config.
   */
 class HeadlinePlanPinSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}
 
-  /** Counts are pinned against a FRESH session (PlanCensus runs in
-    * its own JVM), but in the full suite earlier specs populate
+  /** Counts are pinned against a FRESH session (graft.tools.Plans runs
+    * in its own JVM), but in the full suite earlier specs populate
     * GraftCaches / the session cache manager, and a headliner that
     * plans over an InMemoryRelation instead of its parquet scans
     * counts differently. One flush before the first count restores
@@ -37,7 +37,8 @@ class HeadlinePlanPinSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  /** (shuffles, broadcasts, scans) per headliner — PlanCensus output. */
+  /** (shuffles, broadcasts, scans) per headliner — the output of
+    * graft.tools.Plans. */
   private val pinned: Map[String, Counts] = Map(
     "q_agg_pricing" -> Counts(1, 0, 1),
     "q_filter_revenue" -> Counts(1, 0, 1),
@@ -101,7 +102,7 @@ class HeadlinePlanPinSpec extends AnyFunSuite {
     freshCaches
     val names = SparkEntry.headline.map(_.name).toSet
     assert(names === pinned.keySet,
-      s"headliner set changed — re-run PlanCensus; " +
+      s"headliner set changed — re-run graft.tools.Plans; " +
         s"unpinned=${names -- pinned.keySet}, " +
         s"stale=${pinned.keySet -- names}")
   }
@@ -115,8 +116,8 @@ class HeadlinePlanPinSpec extends AnyFunSuite {
         s"${q.name}: plan structure drifted — pinned $want, got $got " +
           s"(shuffles, broadcasts, scans). A GROWTH is a regression " +
           s"(find the new Exchange before it costs the bench); a " +
-          s"shrink is an improvement — re-pin via PlanCensus and say " +
-          s"why in the commit.")
+          s"shrink is an improvement — re-pin via graft.tools.Plans " +
+          s"and say why in the commit.")
     }
   }
 

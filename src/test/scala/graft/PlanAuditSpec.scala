@@ -18,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the global windows whose frame is bounded by construction,
   * each with its cardinality argument; Cross-typed BNLJ with a 1-row
   * broadcast side is the standard broadcast-scalar pattern and is
-  * allowed everywhere. Discovery tooling: graft.tools.WindowCensus.
+  * allowed everywhere. Discovery tooling, at sf0.01 on local[8]:
+  *   sbt "runMain graft.tools.WindowCensus <sf0.01 dir>"
   */
 class PlanAuditSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sf}

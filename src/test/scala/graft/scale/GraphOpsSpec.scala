@@ -24,6 +24,23 @@ class GraphOpsSpec extends AnyFunSuite {
     rows.foreach(r => assert(r.getAs[Long]("rank_fp") > 0L))
   }
 
+  test("pagerank node ids do not depend on key width: int32 keys " +
+      "near Int.MaxValue keep their s<k>/p<k> labels") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-pagerank-int32")
+    val (s1, s2) = (Int.MaxValue - 1, Int.MaxValue)
+    val (p1, p2) = (Int.MaxValue - 3, Int.MaxValue)
+    Seq((s1, p1), (s1, p2), (s2, p2)).toDF("l_suppkey", "l_partkey")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val ds = spark.read.parquet(s"$dir/lineitem.parquet").schema
+    assert(ds.map(_.dataType.typeName).distinct === Seq("integer"))
+    try {
+      val labels = SparkEntry.queries("q_pagerank")(spark, dir.toString)
+        .collect().map(_.getAs[String]("node")).toSet
+      assert(labels === Set(s"s$s1", s"s$s2", s"p$p1", s"p$p2"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("pagerankOn API: the hub of a star graph outranks every leaf") {
     import SparkTestSession.spark.implicits._
     // undirected star: hub <-> leaf1..leaf6 (both directions)
