@@ -9,8 +9,12 @@ import org.apache.spark.sql.functions._
   *
   *  - exact: hash-groupBy on content digest (one shuffle on the digest,
   *    never on the full text);
-  *  - n-gram Jaccard: distinct-shingle inverted index → candidate pairs
-  *    → exact Jaccard verify. Ground truth for the sketch variants;
+  *  - n-gram Jaccard and containment: one df-capped posting self-join
+  *    per session COUNTS each candidate pair's shared capped shingles,
+  *    prunes by an exact overlap upper bound (AllPairs/PPJoin count
+  *    filtering), and verifies the few survivors once — the shared
+  *    `dedup.ngram_overlap` entry ([[ngramOverlap]]) both queries and
+  *    the funnel project. Ground truth for the sketch variants;
   *  - MinHash + LSH banding: 128 minhashes → 32 bands × 4 rows →
   *    bucket-join candidates → exact verify. The 100 TB path: shuffle
   *    volume is #docs × #bands instead of #docs × #shingles, and bucket
@@ -39,7 +43,10 @@ object Dedup {
     * shingles, so it is lost only if EVERY shared shingle exceeds the
     * cap — pairs made entirely of boilerplate. Those are exactly the
     * pairs the MinHash/LSH path (df-insensitive: signatures don't see
-    * df) and the exact-digest pass still catch. */
+    * df) and the exact-digest pass still catch. The cap also sets the
+    * count filter's slack: a pair's overlap is at most its capped
+    * shared count plus the smaller of the two docs' hot-shingle counts
+    * (see [[ngramOverlap]]). */
   val MaxShingleDf = 64
 
   /** LSH bucket-width cap: a (band,bucket) with w docs contributes
@@ -74,14 +81,13 @@ object Dedup {
             element_at(t, i + 2)))))
   }
 
-  /** (doc_id, shingle-hash set) with empty docs dropped. Cached via
-    * the session registry: the near-dup queries read it three times
-    * each (signature pass + the two verify joins) and BOTH near-dup
-    * queries share it; at cluster scale this is a checkpoint, locally
-    * an in-memory persist of ~#docs rows. Released by
-    * GraftCaches.release / Bench / Verify. */
+  /** (doc_id, shingle-hash set) with empty docs dropped. One eager
+    * checkpoint per session (GraftCaches.checkpoint) that every
+    * near-dup query reads, often several times: a flat scan per read,
+    * where a lazy persist paid one cache-fill job per scan. Released
+    * by GraftCaches.release / Bench / Verify. */
   private def docShingles(s: SparkSession, d: String): DataFrame =
-    graft.GraftCaches.getOrPersist(s, s"dedup.shingles:$d") {
+    graft.GraftCaches.checkpoint(s, s"dedup.shingles:$d") {
       // Repartition before shingling: the documents parquet is a
       // single split at test SF, and every downstream consumer
       // EXPLODES the shingle arrays (~x100 rows) — spreading the slim
@@ -94,23 +100,35 @@ object Dedup {
         .filter(size(col("sh")) > 0)
     }
 
-  /** Exact Jaccard over distinct shingle sets for a pair DataFrame with
-    * columns d1/d2; keeps pairs ≥ threshold. */
-  private def verifyPairs(pairs: DataFrame, sh: DataFrame): DataFrame = {
+  /** The one verify step of the family: for a pair DataFrame with
+    * columns d1/d2, (d1, d2, i, sz1, sz2) — the exact shared-shingle
+    * count and both set sizes, as longs. */
+  private[scale] def overlapOf(pairs: DataFrame, sh: DataFrame): DataFrame = {
     val s1 = sh.select(col("doc_id").as("d1"), col("sh").as("sh1"))
     val s2 = sh.select(col("doc_id").as("d2"), col("sh").as("sh2"))
-    // |x ∪ y| = |x| + |y| − |x ∩ y| exactly (both arrays are distinct
-    // by construction), so the per-pair array_union — a second full
-    // hash-set build over ~|x|+|y| elements for every candidate — is
-    // pure waste next to the intersect (guide §1.2 step 2: per-task
-    // work). Same integer i and u ⇒ bit-identical jaccard double.
     pairs.join(s1, "d1").join(s2, "d2")
-      .withColumn("i", size(array_intersect(col("sh1"), col("sh2"))))
-      .withColumn("jaccard", col("i").cast("double") /
-        (size(col("sh1")) + size(col("sh2")) - col("i")).cast("double"))
+      .select(col("d1"), col("d2"),
+        size(array_intersect(col("sh1"), col("sh2"))).cast("long").as("i"),
+        size(col("sh1")).cast("long").as("sz1"),
+        size(col("sh2")).cast("long").as("sz2"))
+  }
+
+  /** Pairs of an overlap table (d1, d2, i, sz1, sz2) with Jaccard ≥
+    * threshold. |x ∪ y| = |x| + |y| − |x ∩ y| exactly (both arrays are
+    * distinct by construction), so no per-pair array_union — a second
+    * full hash-set build for every pair — is needed (guide §1.2 step
+    * 2: per-task work). Same integer i and u ⇒ bit-identical jaccard
+    * double whichever path produced the table. */
+  private[scale] def jaccardPairs(ov: DataFrame): DataFrame =
+    ov.withColumn("jaccard", col("i").cast("double") /
+        (col("sz1") + col("sz2") - col("i")).cast("double"))
       .filter(col("jaccard") >= JaccardThreshold)
       .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
-  }
+
+  /** Exact Jaccard over distinct shingle sets for a pair DataFrame with
+    * columns d1/d2; keeps pairs ≥ threshold. */
+  private[scale] def verifyPairs(pairs: DataFrame, sh: DataFrame): DataFrame =
+    jaccardPairs(overlapOf(pairs, sh))
 
   /** LSH S-CURVE CALIBRATION (VERDICT-tier banding tuner): for every
     * df-capped candidate pair, the exact Jaccard rational (i, u) runs
@@ -129,18 +147,9 @@ object Dedup {
     * scalar math, an ≤11-row rollup. */
   private def lshScurve(s: SparkSession, d: String): DataFrame = {
     val sh = docShingles(s, d)
-    val s1 = sh.select(col("doc_id").as("d1"), col("sh").as("sh1"))
-    val s2 = sh.select(col("doc_id").as("d2"), col("sh").as("sh2"))
-    ngramCandidates(sh)
-      .join(s1, "d1").join(s2, "d2")
-      // u from sizes, not array_union: |x ∪ y| = |x| + |y| − |x ∩ y|
-      // exactly on distinct arrays — same longs, half the per-pair
-      // hash-set work (see verifyPairs).
-      .select(
-        size(array_intersect(col("sh1"), col("sh2"))).cast("long")
-          .as("i"),
-        size(col("sh1")).cast("long").as("sz1"),
-        size(col("sh2")).cast("long").as("sz2"))
+    // every candidate, unpruned: the rollup covers all deciles
+    overlapOf(ngramCandidates(sh), sh)
+      // u from sizes, not array_union (see jaccardPairs)
       .withColumn("u", expr("sz1 + sz2 - i"))
       .withColumn("jac_e6", expr("i * 1000000 div u"))
       .withColumn("s4", expr(
@@ -172,30 +181,80 @@ object Dedup {
           .as("recall_b16r8_e6"))
   }
 
-  /** Candidate pairs from the inverted index, df-capped (see
-    * [[MaxShingleDf]]). The hot-shingle set is tiny by construction
-    * (only shingles with df > cap survive the aggregate, and the
-    * partial count combines map-side), so the anti-join is cheap and
-    * co-partitions with the pair join that follows. */
-  def ngramCandidates(sh: DataFrame, maxDf: Int = MaxShingleDf): DataFrame = {
-    val posting = sh.select(col("doc_id"), explode(col("sh")).as("shingle"))
+  /** (doc_id, sz, shingle) postings and the hot shingles (df > cap).
+    * The hot set is tiny by construction (only shingles with df > cap
+    * survive the aggregate, and the partial count combines map-side),
+    * so joins against it are cheap. */
+  private def postings(sh: DataFrame, maxDf: Int): (DataFrame, DataFrame) = {
+    val posting = sh.select(col("doc_id"), size(col("sh")).as("sz"),
+      explode(col("sh")).as("shingle"))
     val hot = posting.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
       .select(col("shingle"))
+    (posting, hot)
+  }
+
+  /** The df-capped posting self-join: one row per (capped shared
+    * shingle, a.doc_id < b.doc_id). */
+  private def cappedPairs(posting: DataFrame, hot: DataFrame): DataFrame = {
     val capped = posting.join(hot, Seq("shingle"), "left_anti")
     capped.as("a").join(capped.as("b"), "shingle")
       .filter(col("a.doc_id") < col("b.doc_id"))
+  }
+
+  /** Candidate pairs from the inverted index, df-capped (see
+    * [[MaxShingleDf]]): every pair sharing at least one capped
+    * shingle. q_dedup_funnel counts them and q_lsh_scurve rolls all
+    * of them up; the two near-dup queries read the pruned
+    * [[ngramOverlap]] instead. */
+  def ngramCandidates(sh: DataFrame, maxDf: Int = MaxShingleDf): DataFrame = {
+    val (posting, hot) = postings(sh, maxDf)
+    cappedPairs(posting, hot)
       .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .distinct()
   }
 
-  /** Exact near-dup ground truth: inverted index on distinct shingles.
-    * Candidate generation shuffles (shingle → doc) postings with the
-    * df cap bounding the self-join; at scale the equivalent-but-cheaper
-    * MinHash path below replaces it. */
+  /** Count-filtered overlap table (d1, d2, i, sz1, sz2) over the
+    * [[ngramCandidates]] pairs: the same posting self-join, but
+    * GROUPED to count c = the pair's capped shared shingles. A pair's
+    * true overlap i is c plus its shared hot shingles, so
+    * ub = c + least(h1, h2) (h = a doc's hot-shingle count) is an
+    * exact upper bound, and only pairs with 5·ub ≥ 3·least(sz1, sz2)
+    * reach the array-intersect verify. That is the containment
+    * filter (max containment ≥ 0.6 ⟺ 5·i ≥ 3·least(sz)); Jaccard ≥
+    * 0.8 implies it, since it forces i ≥ 0.89·least(sz). So the
+    * output holds every candidate either query keeps — the df-cap
+    * contract is unchanged — while only ~150 of ~100k candidates
+    * reach the verify on the perfbench corpus. */
+  def ngramOverlap(sh: DataFrame, maxDf: Int = MaxShingleDf): DataFrame = {
+    val (posting, hot) = postings(sh, maxDf)
+    val h = posting.join(hot, "shingle").groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("h"))
+    def hotOf(side: String) = h.select(col("doc_id").as(s"d$side"),
+      col("h").as(s"h$side"))
+    val kept = cappedPairs(posting, hot)
+      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+        col("a.sz").as("sz1"), col("b.sz").as("sz2"))
+      .agg(count(lit(1)).as("c"))
+      .join(hotOf("1"), Seq("d1"), "left").join(hotOf("2"), Seq("d2"), "left")
+      .filter(expr("5 * (c + least(coalesce(h1, 0), coalesce(h2, 0)))" +
+        " >= 3 * least(sz1, sz2)"))
+    overlapOf(kept.select(col("d1"), col("d2")), sh)
+  }
+
+  /** The session's [[ngramOverlap]], checkpointed once and shared by
+    * q_dedup_ngram_jaccard, q_dedup_containment and q_dedup_funnel. */
+  private def ngramOverlapOf(s: SparkSession, d: String): DataFrame =
+    graft.GraftCaches.checkpoint(s, s"dedup.ngram_overlap:$d") {
+      ngramOverlap(docShingles(s, d))
+    }
+
+  /** Exact near-dup ground truth over the df-capped candidates: the
+    * Jaccard filter of the shared overlap table. At scale the
+    * equivalent-but-cheaper MinHash path below replaces it. */
   private def ngramJaccard(s: SparkSession, d: String): DataFrame =
-    verifyPairs(ngramCandidates(docShingles(s, d)), docShingles(s, d))
+    jaccardPairs(ngramOverlapOf(s, d))
 
   /** Prefix-filtering candidates (Chaudhuri/Ganti/Kaushik 2006; the
     * AllPairs/PPJoin family) — the EXACT alternative to both the df
@@ -243,14 +302,34 @@ object Dedup {
     verifyPairs(prefixFilterCandidates(docShingles(s, d)),
       docShingles(s, d))
 
-  private val prefixFilterOracle = s"""
-      WITH tk AS (SELECT doc_id,
+  /** Oracle CTEs: `tk` tokens and `sh` the distinct 3-gram shingle
+    * strings per doc — the string form of [[docShingles]]. */
+  private val shingleCte = s"""tk AS (SELECT doc_id,
                          string_split_regex(lower(text), '\\s+') AS toks
                   FROM documents),
       sh AS (SELECT doc_id,
                     unnest(list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
                                           for i in range(1, len(toks)-1)])) AS s
-             FROM tk WHERE len(toks) >= 3),
+             FROM tk WHERE len(toks) >= 3)"""
+
+  /** [[shingleCte]] plus the df-capped candidate pairs `cand` (the
+    * [[ngramCandidates]] contract), set sizes and uncapped exact
+    * intersections. */
+  private val cappedCte = s"""$shingleCte,
+      hot AS (SELECT s FROM sh GROUP BY s HAVING count(*) > $MaxShingleDf),
+      shc AS (SELECT doc_id, s FROM sh
+              WHERE s NOT IN (SELECT s FROM hot)),
+      cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+               FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id),
+      sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
+                FROM sh GROUP BY 1),
+      inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2,
+                       CAST(count(*) AS BIGINT) AS i
+                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+                GROUP BY 1, 2)"""
+
+  private val prefixFilterOracle = s"""
+      WITH $shingleCte,
       sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
       dfreq AS (SELECT s, count(*) AS df FROM sh GROUP BY 1),
       pfx AS (SELECT doc_id, s FROM (
@@ -286,46 +365,22 @@ object Dedup {
     * index candidates as the Jaccard path; both directions emitted
     * as EXACT e6 fixed-point (BIGINT intersection · 1e6 div set
     * size — zero float), kept when either direction ≥ 0.6, flagged
-    * near-subset at ≥ 0.9. Shape identical to q_dedup_ngram_jaccard:
-    * posting shuffle bounded by the df cap, pair join co-partitioned
-    * with candidate generation. */
-  private def containment(s: SparkSession, d: String): DataFrame = {
-    val sh = docShingles(s, d)
-    val s1 = sh.select(col("doc_id").as("d1"), col("sh").as("sh1"))
-    val s2 = sh.select(col("doc_id").as("d2"), col("sh").as("sh2"))
-    ngramCandidates(sh).join(s1, "d1").join(s2, "d2")
-      .select(col("d1"), col("d2"),
-        size(array_intersect(col("sh1"), col("sh2"))).cast("long")
-          .as("i"),
-        size(col("sh1")).cast("long").as("sz1"),
-        size(col("sh2")).cast("long").as("sz2"))
-      .withColumn("cont12_e6", expr("i * 1000000 div sz1"))
+    * near-subset at ≥ 0.9. A projection of the same shared overlap
+    * table as q_dedup_ngram_jaccard, whose bound is this filter. */
+  private def containment(s: SparkSession, d: String): DataFrame =
+    containmentOf(ngramOverlapOf(s, d))
+
+  /** The containment projection of an overlap table. */
+  private[scale] def containmentOf(ov: DataFrame): DataFrame =
+    ov.withColumn("cont12_e6", expr("i * 1000000 div sz1"))
       .withColumn("cont21_e6", expr("i * 1000000 div sz2"))
       .filter(greatest(col("cont12_e6"), col("cont21_e6"))
         >= lit(600000L))
       .withColumn("near_subset",
         greatest(col("cont12_e6"), col("cont21_e6")) >= lit(900000L))
-  }
 
   private val containmentOracle = s"""
-      WITH tk AS (SELECT doc_id,
-                         string_split_regex(lower(text), '\\s+') AS toks
-                  FROM documents),
-      sh AS (SELECT doc_id,
-                    unnest(list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                          for i in range(1, len(toks)-1)])) AS s
-             FROM tk WHERE len(toks) >= 3),
-      hot AS (SELECT s FROM sh GROUP BY s HAVING count(*) > $MaxShingleDf),
-      shc AS (SELECT doc_id, s FROM sh
-              WHERE s NOT IN (SELECT s FROM hot)),
-      cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-               FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-                FROM sh GROUP BY 1),
-      inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2,
-                       CAST(count(*) AS BIGINT) AS i
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
+      WITH $cappedCte
       SELECT c.d1, c.d2, inter.i AS i,
              s1.sz AS sz1, s2.sz AS sz2,
              CAST(inter.i * 1000000 // s1.sz AS BIGINT) AS cont12_e6,
@@ -694,13 +749,7 @@ object Dedup {
   /** Shared CTE block: exact n-gram-Jaccard near-dup pairs at the
     * threshold — the ground-truth `pairs(d1, d2, jaccard)` table both
     * the pair oracles and the component oracle build on. */
-  private val jaccardPairsCte = s"""tk AS (SELECT doc_id,
-                         string_split_regex(lower(text), '\\s+') AS toks
-                  FROM documents),
-      sh AS (SELECT doc_id,
-                    unnest(list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                          for i in range(1, len(toks)-1)])) AS s
-             FROM tk WHERE len(toks) >= 3),
+  private val jaccardPairsCte = s"""$shingleCte,
       sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
       inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS i
                 FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
@@ -725,22 +774,7 @@ object Dedup {
     * shingles are all boilerplate is dropped by BOTH sides, instead of
     * relying on the fixture never containing one (ADVICE r2). */
   private val jaccardCappedOracle = s"""
-      WITH tk AS (SELECT doc_id,
-                         string_split_regex(lower(text), '\\s+') AS toks
-                  FROM documents),
-      sh AS (SELECT doc_id,
-                    unnest(list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                          for i in range(1, len(toks)-1)])) AS s
-             FROM tk WHERE len(toks) >= 3),
-      hot AS (SELECT s FROM sh GROUP BY s HAVING count(*) > $MaxShingleDf),
-      shc AS (SELECT doc_id, s FROM sh
-              WHERE s NOT IN (SELECT s FROM hot)),
-      cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-               FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-      inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS i
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2)
+      WITH $cappedCte
       SELECT c.d1, c.d2,
              round(i * 1.0 / (s1.sz + s2.sz - i), 4) AS jaccard
       FROM cand c
@@ -857,8 +891,8 @@ object Dedup {
     //     lost executor forces a job restart; swap for a reliable
     //     checkpoint dir when running on real clusters.
     val adj = cacheKey match {
-      case Some(k) => graft.GraftCaches.getOrBuild(spark, k)(
-        adjRaw.repartition(col("nbr")).localCheckpoint())
+      case Some(k) => graft.GraftCaches.checkpoint(spark, k)(
+        adjRaw.repartition(col("nbr")))
       case None => adjRaw.repartition(col("nbr")).localCheckpoint()
     }
     // Initial labels = identity, read off the adjacency's SELF-LOOP
@@ -951,13 +985,7 @@ object Dedup {
   }
 
   private val contaminationOracle = s"""
-      WITH tk AS (SELECT doc_id,
-                         string_split_regex(lower(text), '\\s+') AS toks
-                  FROM documents),
-      sh AS (SELECT doc_id,
-                    unnest(list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                          for i in range(1, len(toks)-1)])) AS s
-             FROM tk WHERE len(toks) >= 3),
+      WITH $shingleCte,
       ev AS (SELECT DISTINCT s FROM sh WHERE doc_id < 20),
       c AS (SELECT doc_id, s FROM sh WHERE doc_id >= 20),
       agg AS (SELECT c.doc_id, count(*) AS n_shingles,
@@ -1207,17 +1235,14 @@ object Dedup {
     * exact verification, the stage precision, and the candidate
     * fraction relative to the naive n·(n−1)/2 all-pairs — the number
     * that justifies the blocking design at 100 TB. All counts are the
-    * catalog's own oracled pipelines re-aggregated; candidates are
-    * registry-cached because both the count and the verify stage read
-    * them. Ratios are ONE divide of exact BIGINTs. */
+    * catalog's own oracled pipelines re-aggregated: n_verified is the
+    * Jaccard filter of the shared overlap table, the one verify path
+    * of the df-capped family. Ratios are ONE divide of exact BIGINTs. */
   private def dedupFunnel(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sh = docShingles(s, d)
-    val cand = graft.GraftCaches.getOrPersist(s, s"dedup.ngram_cand:$d") {
-      ngramCandidates(sh)
-    }
-    val verified = verifyPairs(cand, sh)
-    cand.agg(count(lit(1)).as("n_candidates"))
+    val verified = jaccardPairs(ngramOverlapOf(s, d))
+    ngramCandidates(sh).agg(count(lit(1)).as("n_candidates"))
       .crossJoin(broadcast(verified.agg(count(lit(1)).as("n_verified"))))
       .crossJoin(broadcast(sh.agg(count(lit(1)).as("n_docs"))))
       .select($"n_docs", $"n_candidates", $"n_verified",
@@ -1228,28 +1253,11 @@ object Dedup {
   }
 
   private val dedupFunnelOracle = s"""
-      WITH tk AS (SELECT doc_id,
-                         string_split_regex(lower(text), '\\s+') AS toks
-                  FROM documents),
-      sh AS (SELECT doc_id,
-                    unnest(list_distinct([toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                          for i in range(1, len(toks)-1)])) AS s
-             FROM tk WHERE len(toks) >= 3),
-      hot AS (SELECT s FROM sh GROUP BY s HAVING count(*) > $MaxShingleDf),
-      shc AS (SELECT doc_id, s FROM sh
-              WHERE s NOT IN (SELECT s FROM hot)),
-      cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-               FROM shc a JOIN shc b
-                 ON a.s = b.s AND a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
-      inter AS (SELECT c.d1, c.d2, count(*) AS i
-                FROM cand c
-                JOIN sh a ON a.doc_id = c.d1
-                JOIN sh b ON b.doc_id = c.d2 AND b.s = a.s
-                GROUP BY 1, 2),
-      ver AS (SELECT d1 FROM inter
-              JOIN sizes s1 ON d1 = s1.doc_id
-              JOIN sizes s2 ON d2 = s2.doc_id
+      WITH $cappedCte,
+      ver AS (SELECT c.d1 FROM cand c
+              JOIN inter ON c.d1 = inter.d1 AND c.d2 = inter.d2
+              JOIN sizes s1 ON c.d1 = s1.doc_id
+              JOIN sizes s2 ON c.d2 = s2.doc_id
               WHERE i * 1.0 / (s1.sz + s2.sz - i) >= $JaccardThreshold),
       agg AS (SELECT (SELECT count(*) FROM sizes) AS n_docs,
                      (SELECT count(*) FROM cand) AS n_candidates,
@@ -1608,28 +1616,7 @@ object Dedup {
       GROUP BY 1, 2, 3 HAVING count(*) > 1""")),
     Q("q_dedup_ngram_jaccard", ngramJaccard, Some(jaccardCappedOracle)),
     Q("q_lsh_scurve", lshScurve, Some(s"""
-      WITH tk AS (SELECT doc_id,
-                         string_split_regex(lower(text), '\\s+') AS toks
-                  FROM documents),
-      sh AS (SELECT doc_id,
-                    unnest(list_distinct([toks[i] || ' ' || toks[i+1]
-                                          || ' ' || toks[i+2]
-                                          for i in range(1, len(toks)-1)]))
-                      AS s
-             FROM tk WHERE len(toks) >= 3),
-      hot AS (SELECT s FROM sh GROUP BY s
-              HAVING count(*) > $MaxShingleDf),
-      shc AS (SELECT doc_id, s FROM sh
-              WHERE s NOT IN (SELECT s FROM hot)),
-      cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-               FROM shc a JOIN shc b
-                 ON a.s = b.s AND a.doc_id < b.doc_id),
-      sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-                FROM sh GROUP BY 1),
-      inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2,
-                       CAST(count(*) AS BIGINT) AS i
-                FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                GROUP BY 1, 2),
+      WITH $cappedCte,
       base AS (SELECT i.i, s1.sz + s2.sz - i.i AS u
                FROM cand c
                JOIN inter i ON c.d1 = i.d1 AND c.d2 = i.d2

@@ -1043,15 +1043,14 @@ object GraphOps {
     val e = graft.GraftCaches.getOrPersist(s, s"graph.sp_edges:$d") {
       edges(s, d)
     }
-    val w0 = graft.GraftCaches.getOrBuild(s, s"graph.katz_w0:$d") {
+    val w0 = graft.GraftCaches.checkpoint(s, s"graph.katz_w0:$d") {
       e.select($"src".as("node")).distinct()
-        .withColumn("w", lit(1L)).localCheckpoint()
+        .withColumn("w", lit(1L))
     }
     val walks = (1 to KatzRounds).scanLeft(w0) { (prev, i) =>
-      graft.GraftCaches.getOrBuild(s, s"graph.katz_w$i:$d") {
+      graft.GraftCaches.checkpoint(s, s"graph.katz_w$i:$d") {
         e.join(broadcast(prev.withColumnRenamed("node", "src")), "src")
           .groupBy($"dst".as("node")).agg(sum($"w").as("w"))
-          .localCheckpoint()
       }
     }.drop(1)
     val combined = walks.zipWithIndex.map { case (wk, i0) =>

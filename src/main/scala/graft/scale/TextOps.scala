@@ -2416,15 +2416,13 @@ object TextOps {
 
   /** The shared training chain: (final symbolized vocabulary after
     * all [[BpeMerges]] rounds — still keyed by the surface word — and
-    * the per-round winning pairs). Session-cached per round via
-    * [[graft.GraftCaches.getOrBuild]] (the checkpointed frames
-    * self-materialize; an added persist would double-store), so
-    * q_bpe_train and q_bpe_encode run ONE training chain per
-    * session. */
+    * the per-round winning pairs). Session-cached per round as eager
+    * checkpoints ([[graft.GraftCaches.checkpoint]]), so q_bpe_train
+    * and q_bpe_encode run ONE training chain per session. */
   private def bpeTables(s: SparkSession, d: String)
       : (DataFrame, Seq[DataFrame]) = {
     import s.implicits._
-    var words = graft.GraftCaches.getOrBuild(s, s"text.bpe_w0:$d") {
+    var words = graft.GraftCaches.checkpoint(s, s"text.bpe_w0:$d") {
       Tables.documents(s, d)
         .select(explode(tokens($"text")).as("w"))
         .filter($"w" =!= "")
@@ -2432,21 +2430,18 @@ object TextOps {
         .select($"w",
           concat(split($"w", ""), array(lit(BpeEow))).as("syms"),
           $"cnt")
-        .localCheckpoint()
     }
     val bests = (1 to BpeMerges).map { i =>
       val prev = words
-      val best = graft.GraftCaches.getOrBuild(s, s"text.bpe_b$i:$d") {
+      val best = graft.GraftCaches.checkpoint(s, s"text.bpe_b$i:$d") {
         prev.select(explode(expr(BpePairsSql)).as("p"), $"cnt")
           .groupBy($"p.l".as("l"), $"p.r".as("r"))
           .agg(sum($"cnt").as("pc"))
           .orderBy($"pc".desc, $"l".asc, $"r".asc).limit(1)
-          .localCheckpoint()
       }
-      words = graft.GraftCaches.getOrBuild(s, s"text.bpe_w$i:$d") {
+      words = graft.GraftCaches.checkpoint(s, s"text.bpe_w$i:$d") {
         prev.crossJoin(broadcast(best))
           .select($"w", expr(BpeMergeFoldSql).as("syms"), $"cnt")
-          .localCheckpoint()
       }
       best
     }
@@ -2614,7 +2609,7 @@ object TextOps {
   private def bpeBatchTables(s: SparkSession, d: String)
       : (DataFrame, Seq[DataFrame]) = {
     import s.implicits._
-    var words = graft.GraftCaches.getOrBuild(s, s"text.bpeb_w0:$d") {
+    var words = graft.GraftCaches.checkpoint(s, s"text.bpeb_w0:$d") {
       Tables.documents(s, d)
         .select(explode(tokens($"text")).as("w"))
         .filter($"w" =!= "")
@@ -2622,11 +2617,10 @@ object TextOps {
         .select($"w",
           concat(split($"w", ""), array(lit(BpeEow))).as("syms"),
           $"cnt")
-        .localCheckpoint()
     }
     val sels = (1 to BpeBatchRounds).map { i =>
       val prev = words
-      val rules = graft.GraftCaches.getOrBuild(s, s"text.bpeb_b$i:$d") {
+      val rules = graft.GraftCaches.checkpoint(s, s"text.bpeb_b$i:$d") {
         prev.select(explode(expr(BpePairsSql)).as("p"), $"cnt")
           .groupBy($"p.l".as("l"), $"p.r".as("r"))
           .agg(sum($"cnt").as("pc"))
@@ -2636,14 +2630,12 @@ object TextOps {
           .select(posexplode(expr(BpeBatchSelectSql)))
           .select(($"pos" + 1).cast("long").as("rank"),
             $"col.l".as("l"), $"col.r".as("r"), $"col.pc".as("pc"))
-          .localCheckpoint()
       }
-      words = graft.GraftCaches.getOrBuild(s, s"text.bpeb_w$i:$d") {
+      words = graft.GraftCaches.checkpoint(s, s"text.bpeb_w$i:$d") {
         val ruleList = rules
           .agg(collect_list(struct($"l", $"r")).as("rules"))
         prev.crossJoin(broadcast(ruleList))
           .select($"w", expr(BpeBatchFoldSql).as("syms"), $"cnt")
-          .localCheckpoint()
       }
       rules
     }
@@ -2780,7 +2772,7 @@ object TextOps {
   private def bpeLargeTables(s: SparkSession, d: String)
       : (DataFrame, Seq[DataFrame]) = {
     import s.implicits._
-    var words = graft.GraftCaches.getOrBuild(s, s"text.bpel_w0:$d") {
+    var words = graft.GraftCaches.checkpoint(s, s"text.bpel_w0:$d") {
       val ts = filter(tokens($"text"), t => t =!= "")
       val n1 = greatest(size(ts) - 1, lit(0))
       Tables.documents(s, d)
@@ -2791,11 +2783,10 @@ object TextOps {
         .select($"w",
           concat(split($"w", ""), array(lit(BpeEow))).as("syms"),
           $"cnt")
-        .localCheckpoint()
     }
     val sels = (1 to BpeLargeRounds).map { i =>
       val prev = words
-      val rules = graft.GraftCaches.getOrBuild(s, s"text.bpel_b$i:$d") {
+      val rules = graft.GraftCaches.checkpoint(s, s"text.bpel_b$i:$d") {
         prev.select(explode(expr(BpePairsSql)).as("p"), $"cnt")
           .groupBy($"p.l".as("l"), $"p.r".as("r"))
           .agg(sum($"cnt").as("pc"))
@@ -2805,14 +2796,12 @@ object TextOps {
           .select(posexplode(expr(bpeSelectSql(BpeLargeC))))
           .select(($"pos" + 1).cast("long").as("rank"),
             $"col.l".as("l"), $"col.r".as("r"), $"col.pc".as("pc"))
-          .localCheckpoint()
       }
-      words = graft.GraftCaches.getOrBuild(s, s"text.bpel_w$i:$d") {
+      words = graft.GraftCaches.checkpoint(s, s"text.bpel_w$i:$d") {
         val ruleList = rules
           .agg(collect_list(struct($"l", $"r")).as("rules"))
         prev.crossJoin(broadcast(ruleList))
           .select($"w", expr(BpeBatchFoldSql).as("syms"), $"cnt")
-          .localCheckpoint()
       }
       rules
     }

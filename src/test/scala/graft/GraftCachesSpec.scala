@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftCachesSpec extends AnyFunSuite {
@@ -60,5 +61,38 @@ class GraftCachesSpec extends AnyFunSuite {
     assert(a.collect()(0).getInt(0) === 1)
     assert(b.collect()(0).getInt(0) === 2)
     GraftCaches.release(spark)
+  }
+
+  /** Persisted RDDs created since `mark` (an RDD id watermark): the
+    * shared test context also holds other suites' RDDs. */
+  private def persistedSince(mark: Int): Iterable[Int] =
+    spark.sparkContext.getPersistentRDDs.keys.filter(_ >= mark)
+
+  test("checkpoint builds once, eagerly, with lineage cut; release frees its blocks") {
+    var builds = 0
+    def build() = { builds += 1; spark.range(100).toDF("x").repartition(4) }
+    val mark = spark.sparkContext.emptyRDD[Int].id
+    val a = GraftCaches.checkpoint(spark, "spec.ckpt")(build())
+    val b = GraftCaches.checkpoint(spark, "spec.ckpt")(build())
+    assert(builds === 1)
+    assert(a eq b, "must return the identical checkpointed instance")
+    assert(a.queryExecution.logical.isInstanceOf[LogicalRDD],
+      "the entry must plan as a flat scan of its checkpoint")
+    assert(persistedSince(mark).nonEmpty, "eager: blocks exist before any action")
+    assert(a.count() === 100L)
+    GraftCaches.release(spark)
+    assert(persistedSince(mark).isEmpty, "release must free the checkpoint blocks")
+  }
+
+  test("release leaves no persisted RDD behind after the near-dup family") {
+    GraftCaches.release(spark)
+    val mark = spark.sparkContext.emptyRDD[Int].id
+    Seq("q_dedup_ngram_jaccard", "q_dedup_containment", "q_dedup_funnel",
+      "q_lsh_scurve").foreach(q =>
+      SparkEntry.queries(q)(spark, SparkTestSession.sf).collect())
+    assert(persistedSince(mark).nonEmpty, "the family materializes shared entries")
+    GraftCaches.release(spark)
+    assert(persistedSince(mark).isEmpty,
+      s"persisted after release: ${persistedSince(mark).mkString(", ")}")
   }
 }

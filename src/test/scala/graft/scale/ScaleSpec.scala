@@ -868,6 +868,50 @@ class ScaleSpec extends AnyFunSuite {
     assert(capped === 0, "df cap must drop the boilerplate shingle")
   }
 
+  test("count-filtered overlap keeps exactly the pairs verify-every-" +
+      "candidate keeps, on a hot-shingle corpus and at verify SF") {
+    // maxDf = 2 makes the 38 shingles of the shared 40-token run hot
+    // (df 6): pairs (1,2) and (5,6) share ONE capped shingle and reach
+    // Jaccard ≥ 0.8 / containment ≥ 0.6 only through the hot run, so
+    // only the bound's least(h1, h2) term keeps them; pairs sharing
+    // only hot shingles (3,4 …) are no candidates; (7,8) is a
+    // candidate the bound prunes; (9,10) is a plain capped near-dup.
+    val hotRun = (1 to 40).map(i => s"h$i").mkString(" ")
+    def run(p: String, a: Int, b: Int) = (a to b).map(i => s"$p$i").mkString(" ")
+    val docs = Seq(
+      (1L, s"k1 k2 k3 a1 $hotRun"),
+      (2L, s"k1 k2 k3 b1 $hotRun"),
+      (3L, s"c1 c2 c3 $hotRun"),
+      (4L, s"d1 d2 d3 $hotRun"),
+      (5L, s"e1 e2 e3 $hotRun"),
+      (6L, s"e1 e2 e3 f0 $hotRun ${run("f", 1, 30)}"),
+      (7L, run("g", 1, 10)),
+      (8L, s"g1 g2 g3 ${run("k", 4, 10)}"),
+      (9L, run("l", 1, 20)),
+      (10L, s"${run("l", 1, 19)} m20")
+    ).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def check(sh: org.apache.spark.sql.DataFrame, maxDf: Int) = {
+      val cand = Dedup.ngramCandidates(sh, maxDf)
+      val ov = Dedup.ngramOverlap(sh, maxDf)
+      assert(rows(Dedup.jaccardPairs(ov)) === rows(Dedup.verifyPairs(cand, sh)))
+      assert(rows(Dedup.containmentOf(ov)) ===
+        rows(Dedup.containmentOf(Dedup.overlapOf(cand, sh))))
+      (cand, ov)
+    }
+    val sh = docs.select($"doc_id", Dedup.shingleHashes($"text").as("sh"))
+    val (cand, ov) = check(sh, maxDf = 2)
+    assert(pairs(cand) === Set((1L, 2L), (5L, 6L), (7L, 8L), (9L, 10L)))
+    assert(pairs(ov) === Set((1L, 2L), (5L, 6L), (9L, 10L)))
+    assert(pairs(Dedup.jaccardPairs(ov)) === Set((1L, 2L), (9L, 10L)))
+    assert(pairs(Dedup.containmentOf(ov)) === Set((1L, 2L), (5L, 6L), (9L, 10L)))
+    check(Tables.documents(spark, sf)
+      .select($"doc_id", Dedup.shingleHashes($"text").as("sh"))
+      .filter(size($"sh") > 0), Dedup.MaxShingleDf)
+  }
+
   test("df cap does not change the catalog output at verify SF") {
     val sh = Tables.documents(spark, sf)
       .select($"doc_id", Dedup.shingleHashes($"text").as("sh"))
